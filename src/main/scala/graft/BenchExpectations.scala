@@ -24,7 +24,8 @@ package graft
   * x67 2.29→1.86…). Every session-2 lowering beat a ~1.29×-inflated
   * box, so each is a real same-code speedup (the r19 grading box reads
   * uniformly ~1.3× above the r18 snapshot box, so only genuinely
-  * faster queries could lower floors there): 22 lowered, 233 carried.
+  * faster queries could lower floors there). Across both sessions: 43
+  * lowered, 212 carried.
   * The large drops are the round's optimizations (single-pass recall
   * curves — x128 12.21→5.71, x117 10.22→6.91, x114 9.97→6.65, x112
   * 7.31→6.24, pl12 8.65→6.36; codegen'd OPQ cross-matrix — x129

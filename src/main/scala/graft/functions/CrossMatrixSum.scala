@@ -43,8 +43,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * per-cell count(1), identical for every cell since each well-formed
   * row feeds all cells). Rows with a NULL vector on either side are
   * skipped (the exploded form generated nothing for them); a non-null
-  * vector of the wrong length aborts loudly — silently partial cells
-  * would corrupt the fit.
+  * vector of the wrong length, or with a null element, aborts loudly —
+  * silently partial cells would corrupt the fit. `dim` is bounded by
+  * [[CrossMatrixSum.MaxDim]].
   */
 @ExpressionDescription(
   usage = "_FUNC_(y, x, dim, scale, split) - Procrustes cross-matrix sums on two exact long halves, plus the row count.")
@@ -58,7 +59,8 @@ case class CrossMatrixSum(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Long]] {
 
-  require(dim > 0, "dim must be positive")
+  require(dim > 0 && dim <= CrossMatrixSum.MaxDim,
+    s"dim must be in 1..${CrossMatrixSum.MaxDim}, got $dim")
   require(scale > 0 && split > 0, "scale/split must be positive")
 
   private val dimSq = dim * dim
@@ -93,6 +95,9 @@ case class CrossMatrixSum(
       val xl = new Array[Long](dim)
       var i = 0
       while (i < dim) {
+        if (yd.isNullAt(i) || xd.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"cross_matrix_sum: null element at index $i of a non-null vector")
         yl(i) = lattice(yd.getDouble(i))
         xl(i) = lattice(xd.getDouble(i))
         i += 1
@@ -169,4 +174,12 @@ case class CrossMatrixSum(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): CrossMatrixSum =
     copy(y = newChildren(0), x = newChildren(1))
+}
+
+object CrossMatrixSum {
+  /** Largest supported vector width. Each aggregation buffer holds
+    * 2·dim²+1 longs and every row costs dim² multiply-adds: 16 MB and
+    * 1 M products a row at 1024, far past the OPQ fits' widths, and far
+    * below the Int overflow of the buffer length (from dim 32768). */
+  val MaxDim = 1024
 }

@@ -412,15 +412,6 @@ object TextOps {
     exploded.groupBy("id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band signatures: numBands strings, each concatenating BandRows
-    * minhash values — docs sharing any band signature are candidates. */
-  def bandSignatures(sig: Column): Column =
-    array((0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(":", (0 until BandRows).map(r => element_at(sig, b * BandRows + r + 1)): _*)
-          .as("sig"))
-    }: _*)
-
   /** Fixed-size chunk hashes: split the text into `size`-char substrings
     * and 60-bit-hash each — the chunk-level dedup key (documents sharing
     * chunks are shift-aligned near-dups or boilerplate carriers). Chunk

@@ -48,12 +48,47 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
-  /** Session-level source configuration — call once at SparkSession
-    * construction (Verify/Bench/tests do). Idempotent; `events` calls it
-    * defensively so ad-hoc sessions still work. */
+  /** Entries of Spark's generated-class cache (`CodeGenerator`), which is
+    * built once per JVM at `spark.sql.codegen.cache.maxEntries` (default
+    * 100). The cache is keyed by (thread context class loader, code), and
+    * in local mode the driver thread and the task threads have different
+    * loaders, so every generated body takes two entries: one pass of the
+    * four pipelines plus the BPE loop uses 99 distinct bodies, about 200
+    * keys. Guava splits the capacity into 4 LRU segments (25 entries each
+    * at the default), so the passes' cyclic access evicted every class
+    * before its reuse (147 recompiles a pass, 1–2.5 s of Janino). At 1000
+    * a segment holds 250 entries, five times its ~50-key share of that
+    * working set. */
+  val CodegenCacheEntries = 1000
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[Tables])
+  private val codegenCacheTouched = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Session-level configuration — call once at SparkSession construction,
+    * before the first query (Verify/Bench/tests/perfbench do). Idempotent
+    * and cheap; `events` calls it defensively so ad-hoc sessions still work.
+    *
+    *  - `nanosAsLong`: surfaces events.ts's TIMESTAMP(NANOS) parquet, which
+    *    the vectorized reader rejects (see [[Tables.events]]);
+    *  - the generated-class cache is sized to [[CodegenCacheEntries]]: the
+    *    session's static conf is raised (never lowered), then
+    *    `CodeGenerator` is touched so its JVM-wide cache is built at that
+    *    size. Code compiled before the first call already built the cache
+    *    at the old size; that is logged once, as it cannot be undone. */
   def configure(spark: SparkSession): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
+    val conf = spark.sessionState.conf
+    val belowTarget = conf.getConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES) < CodegenCacheEntries
+    if (belowTarget) conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
+    if (codegenCacheTouched.compareAndSet(false, true)) {
+      // The first touch builds the cache, sized from this session's conf.
+      val compiledBefore = SQLConf.withExistingConf(conf)(CodeGenerator.compileTime) > 0
+      if (belowTarget && compiledBefore) log.warn("generated code was compiled before the " +
+        s"first Tables.configure: Spark's codegen cache keeps the size it was built with, not $CodegenCacheEntries")
+    }
   }
 
   /** The ts-encoding sniff behind [[Tables.events]] — shared with the

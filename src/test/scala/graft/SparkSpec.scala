@@ -5,7 +5,10 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the suite (one JVM-wide session — Spark's
-  * getOrCreate makes this cheap across specs within the forked test JVM). */
+  * getOrCreate makes this cheap across specs within the forked test JVM).
+  * `Tables.configure` runs before the session's first query: it sizes the
+  * JVM-wide codegen cache, which any earlier compile would fix at Spark's
+  * default (CodegenCacheSpec). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()

@@ -108,4 +108,36 @@ class CrossMatrixSumSpec extends SparkSpec {
     }
     assert(e.getMessage != null)
   }
+
+  test("a null element inside a non-null vector aborts loudly, on " +
+       "either side, instead of reading as 0.0") {
+    import spark.implicits._
+    val dim = 2
+    for ((y, x) <- Seq((Seq(Some(1.0), None), Seq(Some(0.5), Some(-0.5))),
+                       (Seq(Some(1.0), Some(2.0)), Seq(None, Some(-0.5))))) {
+      val df = Seq((y, x)).toDF("y", "x")
+      val e = intercept[Exception] {
+        df.agg(crossAgg(dim)(col("y"), col("x")).as("m")).head()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null && c.getMessage.contains("null element")),
+        s"unexpected failure: $e")
+    }
+  }
+
+  test("dim outside 1..MaxDim is rejected at construction, before any " +
+       "dim² buffer is sized") {
+    val y = ColumnBridge.expression(col("y"))
+    val x = ColumnBridge.expression(col("x"))
+    val max = graft.functions.CrossMatrixSum.MaxDim
+    // 46341² overflows Int: unchecked, the buffer length would wrap negative
+    for (dim <- Seq(0, max + 1, 46341)) {
+      val e = intercept[IllegalArgumentException] {
+        graft.functions.CrossMatrixSum(y, x, dim, Scale, Split)
+      }
+      assert(e.getMessage.contains(s"got $dim"))
+    }
+    assert(graft.functions.CrossMatrixSum(y, x, max, Scale, Split)
+      .createAggregationBuffer().length == 2 * max * max + 1)
+  }
 }

@@ -20,6 +20,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
+      graft.sources.Tables.configure(withExt)
       val out = withExt.sql(
         "SELECT dot_product(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
         .head.getDouble(0)
@@ -87,6 +88,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         .config("spark.ui.enabled", "false")
         .withExtensions(new GraftExtensions)
         .getOrCreate()
+      graft.sources.Tables.configure(withExt)
       import withExt.implicits._
       import org.apache.spark.sql.functions._
       val w = org.apache.spark.sql.expressions.Window
