@@ -28,10 +28,13 @@ import org.apache.spark.sql.types._
   * accumulators (each its own ascending fold, identical values to
   * standalone [[DotProduct]] calls).
   *
-  * Null semantics: null/empty inputs yield null; a cell whose centroid
-  * length differs from the vector is SKIPPED (the literal form's l2sq
-  * yields null for it, which `array_min`'s null-last ordering likewise
-  * never selects); if no cell matches, null.
+  * Null semantics, the literal form's (its l2sq yields null, which
+  * `array_min`'s null-last ordering never selects): null/empty inputs
+  * yield null; a null element in the vector yields null (every distance
+  * is null); a cell that is null, has a null cid or centroid, holds a
+  * null centroid element, or whose centroid length differs from the
+  * vector is SKIPPED; if no cell matches, null. No null is ever read as
+  * 0.0.
   */
 case class ArgMinCells(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -78,6 +81,7 @@ case class ArgMinCells(left: Expression, right: Expression)
     var vv = 0.0
     var i = 0
     while (i < n) {
+      if (v.isNullAt(i)) return null
       val x = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
       vv += x * x
       i += 1
@@ -87,22 +91,28 @@ case class ArgMinCells(left: Expression, right: Expression)
     var bestCid = 0L
     var j = 0
     while (j < k) {
-      val cell = cells.getStruct(j, 2)
-      val c = cell.getArray(1)
-      if (c.numElements() == n) {
+      val cell = if (cells.isNullAt(j)) null else cells.getStruct(j, 2)
+      val c =
+        if (cell == null || cell.isNullAt(0) || cell.isNullAt(1)) null
+        else cell.getArray(1)
+      if (c != null && c.numElements() == n) {
         val cid = cell.getLong(0)
         var vc = 0.0
         var cc = 0.0
+        var ok = true
         var t = 0
-        while (t < n) {
-          val a = if (isFloat) v.getFloat(t).toDouble else v.getDouble(t)
-          val b = c.getDouble(t)
-          vc += a * b
-          cc += b * b
+        while (ok && t < n) {
+          if (c.isNullAt(t)) ok = false
+          else {
+            val a = if (isFloat) v.getFloat(t).toDouble else v.getDouble(t)
+            val b = c.getDouble(t)
+            vc += a * b
+            cc += b * b
+          }
           t += 1
         }
         val d = (vv - 2.0 * vc) + cc
-        if (!found || d < bestD || (d == bestD && cid < bestCid)) {
+        if (ok && (!found || d < bestD || (d == bestD && cid < bestCid))) {
           found = true; bestD = d; bestCid = cid
         }
       }
@@ -134,33 +144,47 @@ case class ArgMinCells(left: Expression, right: Expression)
       val found = ctx.freshName("found")
       val bestD = ctx.freshName("bestD")
       val bestCid = ctx.freshName("bestCid")
+      val vecNull = ctx.freshName("vecNull")
+      val ok = ctx.freshName("ok")
       val rowCls = "org.apache.spark.sql.catalyst.expressions.GenericInternalRow"
       s"""
          |int $n = $v.numElements();
          |int $k = $cells.numElements();
          |double $vv = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $a = ${get(v, i)};
-         |  $vv += $a * $a;
+         |boolean $vecNull = false;
+         |for (int $i = 0; $i < $n && !$vecNull; $i++) {
+         |  if ($v.isNullAt($i)) {
+         |    $vecNull = true;
+         |  } else {
+         |    double $a = ${get(v, i)};
+         |    $vv += $a * $a;
+         |  }
          |}
          |boolean $found = false;
          |double $bestD = 0.0;
          |long $bestCid = 0L;
-         |for (int $j = 0; $j < $k; $j++) {
+         |for (int $j = 0; $j < $k && !$vecNull; $j++) {
+         |  if ($cells.isNullAt($j)) continue;
          |  org.apache.spark.sql.catalyst.InternalRow $cell = $cells.getStruct($j, 2);
+         |  if ($cell.isNullAt(0) || $cell.isNullAt(1)) continue;
          |  org.apache.spark.sql.catalyst.util.ArrayData $c = $cell.getArray(1);
          |  if ($c.numElements() == $n) {
          |    long $cid = $cell.getLong(0);
          |    double $vc = 0.0;
          |    double $cc = 0.0;
-         |    for (int $t = 0; $t < $n; $t++) {
-         |      double $a = ${get(v, t)};
-         |      double $b = $c.getDouble($t);
-         |      $vc += $a * $b;
-         |      $cc += $b * $b;
+         |    boolean $ok = true;
+         |    for (int $t = 0; $t < $n && $ok; $t++) {
+         |      if ($c.isNullAt($t)) {
+         |        $ok = false;
+         |      } else {
+         |        double $a = ${get(v, t)};
+         |        double $b = $c.getDouble($t);
+         |        $vc += $a * $b;
+         |        $cc += $b * $b;
+         |      }
          |    }
          |    double $d = ($vv - 2.0 * $vc) + $cc;
-         |    if (!$found || $d < $bestD || ($d == $bestD && $cid < $bestCid)) {
+         |    if ($ok && (!$found || $d < $bestD || ($d == $bestD && $cid < $bestCid))) {
          |      $found = true; $bestD = $d; $bestCid = $cid;
          |    }
          |  }

@@ -1,11 +1,14 @@
 package graft.operators
 
+import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** BPE merge-rule learning over the corpus's token sequences — the
   * tokenizer-TRAINING arrow of the pipeline (Sennrich et al., "Neural
@@ -21,30 +24,33 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructFiel
   * Per iteration: count adjacent symbol pairs corpus-wide, pick the most
   * frequent (ties broken lexicographically — determinism the oracle
   * replays), merge its non-overlapping occurrences GREEDILY LEFT TO RIGHT
-  * (the reference BPE semantics), re-number positions, repeat. Greedy
-  * matters only when the pair is a symbol with itself: inside a maximal
-  * run of that symbol, occurrences at odd in-run ranks merge and the rest
-  * are consumed — which is exactly how the position formulation expresses
-  * it, with no sequential per-document scan:
-  *   runId = pos − rank-of-pos-among-this-symbol's-rows (gaps & islands),
-  *   mergeStart = (sym,next)==(a,b) ∧ (a≠b ∨ in-run rank is odd),
-  *   consumed  = previous row was a mergeStart.
+  * (the reference BPE semantics), repeat. Greedy matters only when the
+  * pair is a symbol with itself: inside a maximal run of that symbol,
+  * occurrences at odd in-run ranks merge and the rest are consumed.
   *
-  * Scale shape: the corpus stays EXPLODED in long format (id, pos, sym)
-  * across iterations — one explode total, then per iteration two
-  * id-partitioned window passes, one pair-count aggregation (map-side
-  * partials; pair vocabulary, not corpus, crosses the wire) and ONE
-  * driver-side row (the argmax pair — the Lloyd-iteration pattern). Each
-  * iteration local-checkpoints so the plan stays shallow over any
-  * iteration count. Production tokenizer training runs on a bounded
-  * sample of the corpus (hash-stratified, see Curation.stratifiedSample)
-  * — the recurrence is the same; the gate trains on the whole table.
+  * Scale shape: the corpus is ONE symbol array per document, tokenized
+  * once; documents with fewer than two symbols can never change and drop
+  * out. Each merge scan is ONE aggregation query (two jobs, no window, no
+  * sort of the corpus): a narrow pass applies the previous scan's rules
+  * to every document ([[applyRulesLocal]], the serve path's greedy loop)
+  * and emits the rewritten arrays' adjacent pairs plus one weighted row
+  * per applied rule; one groupBy / orderBy / limit collect returns the
+  * previous rules' exact merge counts and the next page of candidate
+  * pairs (map-side partials — the pair vocabulary, not the corpus,
+  * crosses the wire). The rewritten corpus is local-checkpointed lazily,
+  * so the scan's own query materializes it and lineage stays one step
+  * deep over any iteration count; a final query applies the last rules
+  * and reads their counts, so `scans` merge scans cost `scans + 1`
+  * queries. Production tokenizer training runs on a bounded sample of the
+  * corpus (hash-stratified, see Curation.stratifiedSample) — the
+  * recurrence is the same; the gate trains on the whole table.
   *
-  * Returns one row per iteration:
+  * [[learnMerges]] returns one row per iteration:
   *   (it, sym_a, sym_b, pair_n, n_merged)
   * where pair_n is the winning pair's corpus count at selection time and
   * n_merged the occurrences actually merged (< pair_n when occurrences
-  * overlap inside same-symbol runs). */
+  * overlap inside same-symbol runs). Training treats every input row as
+  * one document; `idCol` only names the key, which no step needs. */
 object BpeTrainer {
 
   private val wSeq = Window.partitionBy("id").orderBy("pos")
@@ -57,7 +63,11 @@ object BpeTrainer {
 
   /** Flag one rule's greedy merges over a long-format corpus: adds
     * `nsym`, `mstart` (this row starts a merge) and `consumed` (this row
-    * was absorbed by its predecessor's merge). */
+    * was absorbed by its predecessor's merge). Greedy left-to-right
+    * needs no sequential per-document scan here:
+    *   runId = pos − rank-of-pos-among-this-symbol's-rows (gaps & islands),
+    *   mergeStart = (sym,next)==(a,b) ∧ (a≠b ∨ in-run rank is odd),
+    *   consumed  = previous row was a mergeStart. */
   private def flagMerges(seqs: DataFrame, a: String, b: String): DataFrame = {
     val adjacent = (col("sym") === a) && (col("nsym") === b)
     // the gaps-and-islands run machinery (two extra (id,sym[,runid])
@@ -91,47 +101,23 @@ object BpeTrainer {
         when(col("mstart"), concat(col("sym"), lit(" "), col("nsym")))
           .otherwise(col("sym")).as("sym"))
 
+  /** Serial greedy training: the batchN = 1 case of
+    * [[learnMergesBatched]] (one rule per scan, so selection is the plain
+    * argmax), one row per iteration. */
   def learnMerges(df: DataFrame, idCol: String, textCol: String,
                   iters: Int): DataFrame = {
     require(iters > 0, "iters must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    var seqs = explodeTokens(df, idCol, textCol).localCheckpoint()
-    // every applied merge removes exactly one row, so n_merged is the
-    // row-count delta between checkpoints — no separate flagged-frame
-    // materialization or filter-count job per iteration
-    var nRows = seqs.count()
-    val learned = ArrayBuffer.empty[(Int, String, String, Long, Long)]
-    var it = 1
-    var exhausted = false
-    while (it <= iters && !exhausted) {
-      val best = seqs
-        .withColumn("nsym", lead(col("sym"), 1).over(wSeq))
-        .filter(col("nsym").isNotNull)
-        .groupBy("sym", "nsym").agg(count(lit(1)).as("c"))
-        .orderBy(col("c").desc, col("sym").asc, col("nsym").asc)
-        .limit(1).collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val (a, b, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        seqs = applyFlagged(flagMerges(seqs, a, b)).localCheckpoint()
-        val newRows = seqs.count()
-        learned += ((it, a, b, cnt, nRows - newRows))
-        nRows = newRows
-        it += 1
-      }
-    }
-    learned.toSeq.toDF("it", "sym_a", "sym_b", "pair_n", "n_merged")
+    learnMergesBatched(df, idCol, textCol, iters, 1)
+      .select(col("scan").as("it"), col("sym_a"), col("sym_b"),
+        col("pair_n"), col("n_merged"))
   }
 
   /** BPE training with BATCHED merge selection (round-15 verdict #4):
-    * [[learnMerges]] runs one Spark job plus one driver argmax PER MERGE —
-    * sample-bounded and correct, but a production ~32k-merge vocabulary
-    * means 32k sequential jobs, days of scheduler latency regardless of
-    * data size. Here each SCAN selects up to `batchN` pairs and applies
-    * them in ONE merge pass, cutting the job count ~batchN×. Selection is
+    * serial training runs one scan PER MERGE — sample-bounded and
+    * correct, but a production ~32k-merge vocabulary means 32k sequential
+    * queries, days of scheduler latency regardless of data size. Here
+    * each SCAN selects up to `batchN` pairs and applies them in ONE merge
+    * pass, cutting the query count ~batchN×. Selection is
     * the standard non-interacting batch rule: walk pairs in (count desc,
     * lexicographic) order and accept a pair only if it shares NO symbol
     * with any pair already accepted this scan — where "symbols of a pair"
@@ -151,110 +137,128 @@ object BpeTrainer {
     * The recurrence itself is the gated contract — x111's oracle replays
     * selection, batching, and the merge passes exactly.
     *
-    * Scale shape per scan: the same two window passes and one pair-count
-    * aggregation as [[learnMerges]], plus one bounded driver fetch (the
-    * ordered pair page the selection walks — ≤ max(64, 16·batchN) rows,
-    * escalating only if a page exhausts before batchN accepted), and the
-    * merge pass carries all batchN rules via one broadcast join. Returns
-    * one row per accepted rule: (scan, slot, sym_a, sym_b, pair_n,
-    * n_merged), slot = acceptance order within the scan. */
+    * Scale shape per scan: the one aggregation query of the class doc,
+    * whose narrow pass applies all of the previous scan's rules in slot
+    * order (rules travel in the task closure — at most batchN pairs) and
+    * whose collect is the bounded pair page the selection walks
+    * (≤ max(64, 16·batchN) rows, re-fetched larger only if a page
+    * exhausts before batchN accepted). Returns one row per accepted rule:
+    * (scan, slot, sym_a, sym_b, pair_n, n_merged), slot = acceptance
+    * order within the scan. */
   def learnMergesBatched(df: DataFrame, idCol: String, textCol: String,
                          scans: Int, batchN: Int): DataFrame = {
     require(scans > 0, "scans must be positive")
     require(batchN > 0, "batchN must be positive")
     val spark = df.sparkSession
     import spark.implicits._
-    var seqs = explodeTokens(df, idCol, textCol).localCheckpoint()
+    // toRdd, not .rdd: the tokenizing scan runs inside the first scan's
+    // query instead of opening a SQL execution of its own
+    var corpus: RDD[Doc] = df.select(TextOps.tokens(col(textCol)))
+      .queryExecution.toRdd.flatMap[Doc](r =>
+        if (r.isNullAt(0)) None
+        else Some((r.getArray(0).toObjectArray(StringType).map(_.toString),
+          null)))
     val learned = ArrayBuffer.empty[(Int, Int, String, String, Long, Long)]
+    // rules accepted by the previous scan, applied by this one's query
+    var pending = Seq.empty[(String, String, Long)]
     var scan = 1
-    var exhausted = false
-    while (scan <= scans && !exhausted) {
-      val counts = seqs
-        .withColumn("nsym", lead(col("sym"), 1).over(wSeq))
-        .filter(col("nsym").isNotNull)
-        .groupBy("sym", "nsym").agg(count(lit(1)).as("c"))
-      val accepted = selectNonInteracting(counts, batchN)
-      if (accepted.isEmpty) exhausted = true
-      else {
-        val flagged =
-          flagMergesMulti(seqs, accepted.map(t => (t._1, t._2)))
-            .localCheckpoint()
-        val merged = flagged.filter(col("mstart"))
-          .groupBy("sym", "nsym").agg(count(lit(1)).as("m"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-        accepted.zipWithIndex.foreach { case ((a, b, c), k) =>
-          learned += ((scan, k + 1, a, b, c, merged.getOrElse((a, b), 0L)))
-        }
-        seqs = applyFlagged(flagged).localCheckpoint()
-        scan += 1
+    var more = true
+    while (more) {
+      val select = scan <= scans
+      corpus = rewrite(corpus, pending.map(p => (p._1, p._2)).toArray)
+      // serialized: a deserialized block of symbol arrays is sized by
+      // walking its object graph, which cost more than the whole scan
+      // (~230 of ~280 ms a scan, 500 documents on local[4])
+      if (select)
+        corpus.persist(StorageLevel.MEMORY_AND_DISK_SER).localCheckpoint()
+      var page = if (select) math.max(64, 16 * batchN) else 0
+      val (merged, pairs) = scanQuery(spark, corpus, pending.length, page)
+      var top = pairs
+      var accepted = selectNonInteracting(top, batchN)
+      // a page shorter than requested is the whole relation
+      while (select && accepted.length < batchN && top.length == page) {
+        page *= 4
+        top = scanQuery(spark, corpus, 0, page)._2
+        accepted = selectNonInteracting(top, batchN)
       }
+      pending.zipWithIndex.foreach { case ((a, b, c), k) =>
+        learned += ((scan - 1, k + 1, a, b, c, merged(k)))
+      }
+      pending = accepted
+      more = select && accepted.nonEmpty
+      scan += 1
     }
     learned.toSeq
       .toDF("scan", "slot", "sym_a", "sym_b", "pair_n", "n_merged")
   }
 
-  /** Greedy non-interacting selection over the ordered pair counts, with
-    * bounded driver pages: fetch the top-k page, walk it in rank order
-    * accepting symbol-disjoint pairs; escalate the page size only if it
-    * exhausts before `n` accepted AND more pairs may exist (a fetched
-    * page shorter than requested is the whole relation). The result is
-    * page-size-invariant — identical to walking the full ordered list. */
-  private def selectNonInteracting(counts: DataFrame,
-                                   n: Int): Seq[(String, String, Long)] = {
-    var k = math.max(64, 16 * n)
-    while (true) {
-      val page = counts
-        .orderBy(col("c").desc, col("sym").asc, col("nsym").asc)
-        .limit(k).collect()
-      val acc = ArrayBuffer.empty[(String, String, Long)]
-      // symbols touched by accepted pairs INCLUDING the merged symbol
-      // each creates — a candidate touching any of them interacts
-      val used = scala.collection.mutable.HashSet.empty[String]
-      var i = 0
-      while (i < page.length && acc.length < n) {
-        val (a, b, c) =
-          (page(i).getString(0), page(i).getString(1), page(i).getLong(2))
-        if (!used(a) && !used(b)) {
-          acc += ((a, b, c)); used += a; used += b; used += (a + " " + b)
-        }
-        i += 1
-      }
-      if (acc.length == n || page.length < k) return acc.toSeq
-      k *= 4
+  /** A training document: its symbols, and how often each rule of the
+    * rewrite that produced it merged in it (null when none did). */
+  private type Doc = (Array[String], Array[Int])
+
+  private val PageSchema = StructType(Seq(
+    StructField("rule", IntegerType, nullable = false),
+    StructField("sym", StringType, nullable = false),
+    StructField("nsym", StringType, nullable = false),
+    StructField("w", LongType, nullable = false)))
+
+  /** Apply an ordered rule list to every document that can still change
+    * (fewer than two symbols never can, so those drop out). */
+  private def rewrite(corpus: RDD[Doc],
+                      rules: Array[(String, String)]): RDD[Doc] =
+    corpus.filter(_._1.length >= 2).map[Doc] { case (syms, _) =>
+      val merged = new Array[Int](rules.length)
+      val out = applyRulesLocal(ArraySeq.unsafeWrapArray(syms), rules, merged)
+      if (out.length == syms.length) (syms, null) else (out.toArray, merged)
     }
-    Nil // unreachable
+
+  /** One scan's query over a rewritten corpus: the corpus-wide merge
+    * count of each of the `nRules` rules that produced it, and the top
+    * `page` adjacent pairs as (sym, nsym, count) in (count desc, sym,
+    * nsym) order. Rule rows (rule = slot) sort ahead of pair rows
+    * (rule = −1), so one limit covers both. */
+  private def scanQuery(spark: SparkSession, corpus: RDD[Doc], nRules: Int,
+                        page: Int): (Array[Long], Seq[(String, String, Long)]) = {
+    val rows = corpus.mapPartitions { docs =>
+      val merged = new Array[Long](nRules)
+      val pairs = docs.flatMap { case (syms, m) =>
+        if (m != null) for (r <- 0 until nRules) merged(r) += m(r)
+        if (page == 0) Iterator.empty
+        else Iterator.range(0, syms.length - 1)
+          .map(i => Row(-1, syms(i), syms(i + 1), 1L))
+      }
+      pairs ++ Iterator.range(0, nRules).filter(merged(_) > 0)
+        .map(r => Row(r, "", "", merged(r)))
+    }
+    val (ruleRows, pairRows) = spark.createDataFrame(rows, PageSchema)
+      .groupBy("rule", "sym", "nsym").agg(sum(col("w")).as("c"))
+      .orderBy(col("rule").desc, col("c").desc, col("sym").asc,
+        col("nsym").asc)
+      .limit(nRules + page).collect().partition(_.getInt(0) >= 0)
+    val merged = new Array[Long](nRules)
+    ruleRows.foreach(r => merged(r.getInt(0)) = r.getLong(3))
+    (merged,
+      pairRows.map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq)
   }
 
-  /** [[flagMerges]] for a SET of pairwise non-interacting rules in one
-    * pass: the rules ride a broadcast join on (sym, nsym) — each row
-    * matches at most one rule, and non-interaction guarantees merge
-    * starts of different rules are never adjacent, so the shared
-    * consumed = lag(mstart) arithmetic stays exact. The same-symbol
-    * odd-in-run-rank gate is computed generically (per (id, sym, run))
-    * and applied only to self-pair matches. */
-  private def flagMergesMulti(seqs: DataFrame,
-                              rules: Seq[(String, String)]): DataFrame = {
-    val spark = seqs.sparkSession
-    import spark.implicits._
-    val withNsym =
-      if (rules.exists(r => r._1 == r._2)) {
-        val wRun = Window.partitionBy("id", "sym").orderBy("pos")
-        val wInRun = Window.partitionBy("id", "sym", "runid").orderBy("pos")
-        seqs.withColumn("runid", col("pos") - row_number().over(wRun))
-          .withColumn("nsym", lead(col("sym"), 1).over(wSeq))
-          .withColumn("__oddrank", row_number().over(wInRun) % 2 === 1)
-          .drop("runid")
-      } else
-        seqs.withColumn("nsym", lead(col("sym"), 1).over(wSeq))
-          .withColumn("__oddrank", lit(true))
-    withNsym.join(broadcast(rules.toDF("__ra", "__rb")),
-        col("sym") === col("__ra") && col("nsym") === col("__rb"), "left")
-      .withColumn("mstart", col("__ra").isNotNull &&
-        (col("__ra") =!= col("__rb") || col("__oddrank")))
-      .drop("__ra", "__rb", "__oddrank")
-      .withColumn("consumed",
-        coalesce(lag(col("mstart"), 1).over(wSeq), lit(false)))
+  /** Greedy non-interacting selection over one ordered pair page: walk
+    * it in rank order accepting symbol-disjoint pairs, up to `n`. Equal
+    * to walking the full ordered list whenever it accepts `n` or the
+    * page is the whole relation. */
+  private def selectNonInteracting(page: Seq[(String, String, Long)],
+                                   n: Int): Seq[(String, String, Long)] = {
+    val acc = ArrayBuffer.empty[(String, String, Long)]
+    // symbols touched by accepted pairs INCLUDING the merged symbol
+    // each creates — a candidate touching any of them interacts
+    val used = scala.collection.mutable.HashSet.empty[String]
+    val it = page.iterator
+    while (it.hasNext && acc.length < n) {
+      val (a, b, c) = it.next()
+      if (!used(a) && !used(b)) {
+        acc += ((a, b, c)); used += a; used += b; used += (a + " " + b)
+      }
+    }
+    acc.toSeq
   }
 
   /** Tokenizer SERVING, declarative form: apply a STORED, ordered
@@ -400,9 +404,12 @@ object BpeTrainer {
     * once per LIVE rule, quadratic on long documents where many rules
     * fire (the chained same-symbol pathology). Spec-pinned equal to the
     * declarative [[applyMerges]] on randomized corpora and to a
-    * rebuild-per-pass reference on adversarial same-symbol runs. */
+    * rebuild-per-pass reference on adversarial same-symbol runs. When
+    * `merged` is given, `merged(r)` is incremented once per merge rule r
+    * makes (the trainer's per-rule n_merged). */
   private[operators] def applyRulesLocal(
-      tokens: Seq[String], rules: Array[(String, String)]): Seq[String] = {
+      tokens: Seq[String], rules: Array[(String, String)],
+      merged: Array[Int] = null): Seq[String] = {
     val n = tokens.length
     if (n < 2 || rules.isEmpty) return tokens
     val syms = new Array[String](n)
@@ -449,6 +456,7 @@ object BpeTrainer {
             if (pp != -1) addPos(syms(pp), syms(p), pp)
             if (nn != -1) addPos(syms(p), syms(nn), p)
             merges += 1
+            if (merged != null) merged(ri) += 1
           }
           k += 1
         }

@@ -1408,7 +1408,10 @@ object TextQueries {
     // BPE merge-rule learning (Sennrich et al. 2016) at the word level —
     // tokenizer TRAINING, the arrow upstream of every token-budget
     // operator here. Six iterations of count-pairs → argmax (ties
-    // lexicographic) → greedy left-to-right merge → renumber; the gate
+    // lexicographic) → greedy left-to-right merge; each iteration is one
+    // aggregation query over one symbol array per document (the previous
+    // merge applied in the same narrow pass that emits the pairs, no
+    // window shuffle), seven queries for six merges. The gate
     // pins the learned rules, their selection-time counts AND the
     // occurrences actually merged (n_merged < pair_n exactly when the
     // winning pair overlaps itself inside same-symbol runs). The oracle
@@ -1423,19 +1426,20 @@ object TextQueries {
     }),
 
     // ---------------------------------------------------------------- x111
-    // BATCHED BPE training (round-15 verdict #4): x100 is one Spark job +
+    // BATCHED BPE training (round-15 verdict #4): x100 is one query +
     // one driver argmax PER MERGE — a production 32k-merge vocabulary is
-    // 32k sequential jobs, days of scheduler latency at any data size.
+    // 32k sequential queries, days of scheduler latency at any data size.
     // Here each scan accepts up to BpeBatchN symbol-disjoint pairs in
     // (count desc, lex) order — disjoint over each pair's sides AND the
-    // merged symbol it creates — and merges them all in ONE pass
-    // (occurrences never overlap, and earlier accepted pairs can neither
-    // create nor destroy later ones' occurrences — simultaneous ==
-    // slot-order serial). The oracle replays the whole batched recurrence: per-scan
-    // pair ranks, the non-interacting selection cascade, the multi-rule
-    // merge pass, and per-slot merged-occurrence counts; scan 2 runs over
-    // the corpus as rewritten by scan 1, so any selection or application
-    // error cascades.
+    // merged symbol it creates — and the next scan's query merges them
+    // all in ONE narrow pass, in slot order (occurrences never overlap,
+    // and earlier accepted pairs can neither create nor destroy later
+    // ones' occurrences — slot-order == simultaneous); x100's loop is
+    // this one at BpeBatchN = 1. The oracle replays the whole batched
+    // recurrence: per-scan pair ranks, the non-interacting selection
+    // cascade, the multi-rule merge pass, and per-slot merged-occurrence
+    // counts; scan 2 runs over the corpus as rewritten by scan 1, so any
+    // selection or application error cascades.
     "x111_bpe_batched" -> ((s, dir) => {
       val t = Tables(s, dir)
       BpeTrainer.learnMergesBatched(t.documents, "doc_id", "text",

@@ -83,4 +83,15 @@ class CleaningSpec extends SparkSpec {
     assert(ids(0) !== ids(2))
     assert(ids(0).length === 64) // sha256 hex
   }
+
+  test("withUuid adds a non-null, unique, UUID-formatted column (P10)") {
+    val df = (1 to 2000).toDF("n").repartition(4)
+      .transform(Cleaning.withUuid(_)).localCheckpoint()
+    val ids = df.select("firebase_id").collect().map(_.getString(0))
+    assert(ids.length === 2000)
+    assert(ids.forall(_ != null))
+    assert(ids.distinct.length === ids.length)
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    assert(ids.forall(_.matches(uuid)), ids.find(!_.matches(uuid)))
+  }
 }

@@ -102,6 +102,15 @@ class DedupAggSpec extends SparkSpec {
     assert(ds.filter(_.amount > 5.0).count() === 1L)
   }
 
+  test("distinctCount equals an exact distinct().count() (A6), nulls " +
+       "excluded like countDistinct") {
+    val df = ((1 to 5000).map(i => Option(i % 997)) ++ Seq(None, None))
+      .toDF("k").repartition(4)
+    val got = Aggregations.distinctCount(df, "k").head.getLong(0)
+    assert(got === df.distinct().count() - 1) // the null group
+    assert(got === 997L)
+  }
+
   test("approxDistinctCount lands within the requested relative error") {
     val n = 5000
     val df = (1 to n).map(i => i % 1000).toDF("k") // 1000 distinct

@@ -246,6 +246,119 @@ class SketchGraphSpec extends SparkSpec {
 
   // ------------------------------------------------------------ bpe trainer
 
+  /** Runs `body` and counts the Spark jobs it starts. */
+  private def countJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    // listener events are async — drain the bus DETERMINISTICALLY both
+    // before arming the counter (stragglers from a previous measured
+    // body must not land inside this window) and after the body (its
+    // own tail events must be counted); a fixed sleep does neither
+    // reliably on a loaded box
+    val sc = spark.sparkContext
+    org.apache.spark.graftbridge.ListenerBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      org.apache.spark.graftbridge.ListenerBridge.drainListenerBus(sc)
+      (r, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Greedy rule application by rebuilding the whole sequence once per
+    * rule — the plainest reference for the merge step. */
+  private def rebuildPerPass(tokens: Seq[String],
+                             rules: Seq[(String, String)]): Seq[String] = {
+    var cur = tokens.toVector
+    for ((a, b) <- rules) {
+      val out = Vector.newBuilder[String]
+      var i = 0
+      while (i < cur.length) {
+        if (i + 1 < cur.length && cur(i) == a && cur(i + 1) == b) {
+          out += cur(i) + " " + cur(i + 1); i += 2
+        } else { out += cur(i); i += 1 }
+      }
+      cur = out.result()
+    }
+    cur
+  }
+
+  /** Serial greedy BPE in plain Scala: per iteration the most frequent
+    * adjacent pair (ties lexicographic on (a, b)) is merged with
+    * [[rebuildPerPass]]; rows are (it, a, b, pair_n, n_merged). */
+  private def referenceBpe(docs: Seq[Seq[String]],
+                           iters: Int): Seq[(Int, String, String, Long, Long)] = {
+    var corpus = docs
+    val out = scala.collection.mutable.ArrayBuffer
+      .empty[(Int, String, String, Long, Long)]
+    var it = 1
+    var done = false
+    while (it <= iters && !done) {
+      val counts = corpus.flatMap(d => d.zip(d.drop(1)))
+        .groupMapReduce(identity)(_ => 1L)(_ + _)
+      if (counts.isEmpty) done = true
+      else {
+        val ((a, b), c) = counts.toSeq.minBy { case ((a, b), c) => (-c, a, b) }
+        val before = corpus.map(_.length).sum
+        corpus = corpus.map(rebuildPerPass(_, Seq((a, b))))
+        out += ((it, a, b, c, (before - corpus.map(_.length).sum).toLong))
+        it += 1
+      }
+    }
+    out.toSeq
+  }
+
+  test("bpe learnMerges and learnMergesBatched(N=1) equal a plain-Scala " +
+       "greedy BPE on random small-alphabet corpora (self-pair runs, " +
+       "empty, null and one-token documents)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(4201)
+    for (trial <- 1 to 8) {
+      val alphabet = Vector("a", "b", "c").take(2 + trial % 2)
+      val texts: Seq[Option[String]] = (1 to 6 + rnd.nextInt(10)).map { _ =>
+        rnd.nextInt(8) match {
+          case 0 => None
+          case 1 => Some("")
+          case 2 => Some(alphabet(rnd.nextInt(alphabet.size)))
+          case 3 => Some(Seq.fill(2 + rnd.nextInt(7))("a").mkString(" "))
+          case _ => Some(Seq.fill(rnd.nextInt(12))(
+            alphabet(rnd.nextInt(alphabet.size))).mkString(" "))
+        }
+      }
+      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text")
+      val docs = texts.flatten.map(_.split(" ").toSeq.filter(_.nonEmpty))
+      // enough iterations that the small corpora run out of pairs
+      val iters = 3 + trial
+      val expected = referenceBpe(docs, iters)
+      val serial = BpeTrainer.learnMerges(df, "doc_id", "text", iters)
+        .orderBy("it").as[(Int, String, String, Long, Long)].collect().toSeq
+      assert(serial == expected, s"trial $trial serial: texts=$texts")
+      val batched1 = BpeTrainer.learnMergesBatched(df, "doc_id", "text",
+          iters, 1)
+        .orderBy("scan")
+        .select("scan", "sym_a", "sym_b", "pair_n", "n_merged")
+        .as[(Int, String, String, Long, Long)].collect().toSeq
+      assert(batched1 == expected, s"trial $trial batched: texts=$texts")
+    }
+  }
+
+  test("bpe learnMerges runs at most 3 jobs per merge on sf0.001 (one " +
+       "aggregation query per scan — no per-iteration window shuffles)") {
+    val t = graft.sources.Tables(spark, "/root/testdata/sf0.001")
+    val iters = 6
+    val (rules, jobs) = countJobs {
+      BpeTrainer.learnMerges(t.documents, "doc_id", "text", iters).collect()
+    }
+    assert(rules.length == iters)
+    assert(jobs <= 3 * (iters + 1),
+      s"learnMerges ran $jobs jobs for $iters merges")
+  }
+
   test("bpe learnMerges: argmax with lexicographic ties, greedy merge, " +
        "and the next iteration counts over the rewritten corpus") {
     import spark.implicits._
@@ -337,29 +450,6 @@ class SketchGraphSpec extends SparkSpec {
        "(rules, counts and merged occurrences), in a third the jobs") {
     import spark.implicits._
     val t = graft.sources.Tables(spark, "/root/testdata/sf0.001")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    def countJobs(body: => Seq[(Int, String, String, Long, Long)])
-      : (Seq[(Int, String, String, Long, Long)], Int) = {
-      // listener events are async — drain the bus DETERMINISTICALLY both
-      // before arming the counter (stragglers from a previous measured
-      // body must not land inside this window) and after the body (its
-      // own tail events must be counted); a fixed sleep does neither
-      // reliably on a loaded box
-      val sc = spark.sparkContext
-      org.apache.spark.graftbridge.ListenerBridge.drainListenerBus(sc)
-      sc.addSparkListener(listener)
-      jobs.set(0)
-      try {
-        val r = body
-        org.apache.spark.graftbridge.ListenerBridge.drainListenerBus(sc)
-        (r, jobs.get())
-      } finally sc.removeSparkListener(listener)
-    }
     val (serial, serialJobs) = countJobs {
       BpeTrainer.learnMerges(t.documents, "doc_id", "text", 6)
         .orderBy("it")
@@ -423,26 +513,12 @@ class SketchGraphSpec extends SparkSpec {
 
   test("bpe applyRulesLocal equals a rebuild-per-pass reference on " +
        "adversarial same-symbol runs") {
-    def naive(tokens: Seq[String], rules: Seq[(String, String)]): Seq[String] = {
-      var cur = tokens.toVector
-      for ((a, b) <- rules) {
-        val out = Vector.newBuilder[String]
-        var i = 0
-        while (i < cur.length) {
-          if (i + 1 < cur.length && cur(i) == a && cur(i + 1) == b) {
-            out += cur(i) + " " + cur(i + 1); i += 2
-          } else { out += cur(i); i += 1 }
-        }
-        cur = out.result()
-      }
-      cur
-    }
     // same-symbol power chain over a 100003-token single-symbol run
     // (odd length → a remainder survives at every level)
     val run = Seq.fill(100003)("a")
     val chain = Iterator.iterate("a")(s => s + " " + s).take(12)
       .map(s => (s, s)).toArray
-    assert(BpeTrainer.applyRulesLocal(run, chain) == naive(run, chain.toSeq))
+    assert(BpeTrainer.applyRulesLocal(run, chain) == rebuildPerPass(run, chain.toSeq))
     // randomized same-symbol-heavy small docs
     val rnd = new scala.util.Random(4173)
     for (_ <- 1 to 50) {
@@ -451,7 +527,7 @@ class SketchGraphSpec extends SparkSpec {
       val rules = Seq.fill(8)(
         (pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size))))
       assert(BpeTrainer.applyRulesLocal(toks, rules.toArray)
-          == naive(toks, rules),
+          == rebuildPerPass(toks, rules),
         s"toks=$toks rules=$rules")
     }
   }
